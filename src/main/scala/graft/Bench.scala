@@ -1,24 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     def loadavg(): String =
       scala.util.Try(new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("/proc/loadavg"))).trim).getOrElse("")
     val loadStart = loadavg()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE coalescing above cached plans (see GraftSession) — halves
-      // the per-iteration cost of the iterative operators
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness()
     // warm-up: absorb session init + parquet footer reads so per-query
     // timings measure the operators, not first-query JVM spin-up
     Tables.names.foreach { n =>
@@ -70,22 +58,24 @@ object Bench {
     val errs = errors.map { case (k, v) => s"\"$k\":\"$v\"" }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir"}"""
-    // host-load sidecar (separate file — the driver's stdout/JSON
-    // contract stays byte-compatible): loadavg at start and end makes
-    // a contaminated one-shot self-diagnosing (this VM's CPU steal has
-    // historically swung untouched queries 2-9x — r20 verdict)
-    try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_HOST.json"),
-      s"""{"loadavg_start":"$loadStart","loadavg_end":"${loadavg()}","reps":$reps,"cpus":"$cpus"}"""
-        .getBytes("UTF-8"))
-    catch { case _: Throwable => () }
-    // durable copy in the repo: even if the stdout line is clipped by
-    // the log capture, the full per-query map survives for the judge.
-    // Full-suite runs only — a SPARK_GRAFT_ONLY dev subset must not
-    // clobber the committed full map.
-    if (only.isEmpty)
+    // Full-suite runs only write the two sidecars below — a
+    // SPARK_GRAFT_ONLY dev subset must not clobber the committed pair.
+    //  - BENCH_HOST.json, host load (separate file — the stdout
+    //    JSON contract stays byte-compatible): loadavg at start
+    //    and end makes a contaminated one-shot self-diagnosing (this
+    //    VM's CPU steal has historically swung untouched queries 2-9x —
+    //    r20 verdict);
+    //  - BENCH_LOCAL.json, the durable full per-query map: it survives
+    //    even if the stdout line is clipped by the log capture.
+    if (only.isEmpty) {
+      try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_HOST.json"),
+        s"""{"loadavg_start":"$loadStart","loadavg_end":"${loadavg()}","reps":$reps,"cpus":"${GraftSession.cpus}"}"""
+          .getBytes("UTF-8"))
+      catch { case _: Throwable => () }
       try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
         line.getBytes("UTF-8"))
       catch { case _: Throwable => () }
+    }
     // Emission protocol, in recoverability order (diagnosed r16: sbt's
     // default LoggedOutput strategy clipped the multi-kB echoed line to
     // ~4 kB BEFORE the driver took its 2 kB tail — the captured window

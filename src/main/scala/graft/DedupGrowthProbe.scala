@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** d06 growth diagnostic (PLANS.md attribution): separates the two
@@ -15,16 +14,8 @@ import org.apache.spark.sql.functions._
 object DedupGrowthProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val threshold = sys.env.getOrElse("SPARK_GRAFT_D06_THRESHOLD", "0.75").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness()
     import graft.dedup.Dedup
     val e = Tables.embeddings(spark, sfDir)
     // the inventory construction: the table ∪ an id-offset copy, so the

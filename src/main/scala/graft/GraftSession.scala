@@ -34,4 +34,13 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Core count of the harness mains (Verify, Bench, Profile, PlanDump
+    * and the probes): SPARK_GRAFT_CPUS, default every core. */
+  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** The session every harness main runs under: `create` on
+    * `local[cpus]` with `cpus` shuffle partitions. */
+  def harness(): SparkSession = create(s"local[$cpus]", cpus)
 }

@@ -1,25 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only phase profiler (SPARK_GRAFT_PROFILE=name): times the
-  * sub-steps of the composite queries under the exact Bench session so
+  * sub-steps of the composite queries (a21, bm25probe; any inventory
+  * id times the whole query) under the exact Bench session so
   * optimization targets the real cost, not a guess. Not part of the
   * driver contract. */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness()
     Tables.names.foreach { n =>
       try {
         (if (n == "events") Tables.events(spark, sfDir)
@@ -114,23 +105,8 @@ object Profile {
             graft.text.TextStats.bm25SearchIndexed(queries, tmpT)
               .write.format("noop").mode("overwrite").save()
           }
-        case "d24" =>
-          val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-          val planted = docs
-            .unionByName(docs.filter(col("doc_id") % 50 === 0)
-              .select((col("doc_id") + 4000000L).as("doc_id"), col("text")))
-            .unionByName(docs.filter(col("doc_id") % 25 === 0)
-              .select((col("doc_id") + 5000000L).as("doc_id"),
-                expr("array_join(slice(split(text, ' '), 1, " +
-                  "CAST(size(split(text, ' ')) * 9 div 10 AS INT)), ' ')").as("text")))
-          val embeddings = Tables.embeddings(spark, sfDir)
-          time("d24 full") {
-            graft.dedup.Dedup.dedupSweep(planted, embeddings,
-              semanticThreshold = 0.5, dfCap = Some(1000L))
-              .write.format("noop").mode("overwrite").save()
-          }
         case other =>
-          // fall back: any registered query key
+          // fall back: any registered query key, timed whole
           val fn = SparkEntry.queries(other)
           time(other) {
             fn(spark, sfDir).write.format("noop").mode("overwrite").save()

@@ -15,9 +15,9 @@ import graft.ann.Ann
   * scheduler row like `{"topN": 5, "startTs": "2024-03-01"}` drives
   * the same compiled jar through arbitrary re-runs.
   *
-  * Queries without an entry in `runners` fall back to their
-  * default-parameter `SparkEntry.queries` form, so every inventory
-  * name is runnable here.
+  * `runners` is the ONE per-operator binding: run with no params, each
+  * runner IS the inventory query (`SparkEntry.queries` is derived from
+  * it), so its defaults and planted inputs are the oracle-checked ones.
   */
 object TaskRunner {
 
@@ -55,7 +55,22 @@ object TaskRunner {
       .map(t => afterStart.filter(col("ts") < to_timestamp(lit(t)))).getOrElse(afterStart)
   }
 
-  /** Parameter-aware runners (query name -> bound operator). */
+  /** Documents with planted byte-level near-dups, shared by
+    * m12/m13/m14/m16: a one-char-edited copy every 25th doc and an exact
+    * copy every 50th (the d06 id-offset convention; word-salad testdata
+    * has no natural byte-level near-duplicates). */
+  private def plantedBytePayloads(s: SparkSession, d: String): DataFrame = {
+    val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+    docs
+      .unionByName(docs.filter(col("doc_id") % 25 === 0)
+        .select((col("doc_id") + 1000000L).as("doc_id"),
+          concat(lit("X"), expr("substring(text, 2)")).as("text")))
+      .unionByName(docs.filter(col("doc_id") % 50 === 0)
+        .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
+  }
+
+  /** Parameter-aware runners (query name -> bound operator); the
+    * inventory of SURVEY.md §2. */
   val runners: Map[String, (SparkSession, String, Map[String, String]) => DataFrame] = Map(
     "q02_topn_flow" -> ((s, d, p) => FlowAnalytics.topNFlow(Tables.lineitem(s, d), i(p, "topN", 10))),
     "q04_group_topn" -> ((s, d, p) => FlowAnalytics.groupTopN(Tables.lineitem(s, d), i(p, "topN", 3))),
@@ -73,7 +88,9 @@ object TaskRunner {
       Tables.orders(s, d), Tables.customer(s, d), dbl(p, "rsd", 0.02))),
     "q29_percentile_approx" -> ((s, d, p) => RelationalOps.percentilesApprox(
       Tables.lineitem(s, d), i(p, "accuracy", 10000))),
-    // maxEvents mirrors the SparkEntry default cap; 0 disables it
+    // default cap bounds the per-entity array for the generic engine;
+    // non-binding at test SFs (max events/user is 99 at sf0.1); 0
+    // disables it
     "q08_car_track" -> ((s, d, p) => TrackAnalytics.carTrack(
       eventsIn(s, d, p), capI(p, "maxEvents", 1000))),
     "q09_funnel_step" -> ((s, d, p) => TrackAnalytics.funnelStep(eventsIn(s, d, p))),
@@ -88,6 +105,8 @@ object TaskRunner {
       eventsIn(s, d, p), l(p, "gapMs", 1800000L))),
     "q45_rolling_distinct" -> ((s, d, p) => TrackAnalytics.rollingDistinct(
       eventsIn(s, d, p), i(p, "windowDays", 7))),
+    // windowDays=7 (not the function's 90) so ApproxSpec's bound vs
+    // exact q45 is the configuration the inventory executes
     "q49_rolling_distinct_hll" -> ((s, d, p) => TrackAnalytics.rollingDistinctHll(
       eventsIn(s, d, p), i(p, "windowDays", 7), i(p, "lgConfigK", 12))),
     "q46_robust_outliers" -> ((s, d, p) => RelationalOps.robustOutliers(
@@ -112,14 +131,26 @@ object TaskRunner {
       Tables.part(s, d), i(p, "maxDist", 2))),
     "q55_spend_deciles" -> ((s, d, p) => RelationalOps.spendDeciles(
       Tables.orders(s, d), i(p, "tiers", 10))),
+    // threshold 0.5 so the testdata's natural cos>=0.5 pairs (the d05
+    // regime) exercise within-cell drops; output is one verdict row
+    // per vector regardless
     "d16_semantic_dedup" -> ((s, d, p) => Dedup.semanticDedup(
-      Tables.embeddings(s, d), dbl(p, "threshold", 0.95),
+      Tables.embeddings(s, d), dbl(p, "threshold", 0.5),
       cells = i(p, "cells", -1),
       keepPolicy = str(p, "keepPolicy", "min_id"))),
+    // every 5th vector plays the new batch (the a12/d11 convention),
+    // plus id-offset copies of every 25th corpus vector (the d06
+    // planting convention — testdata has no natural cross pairs at any
+    // usable threshold, so the copies guarantee output-visible
+    // corpus_dup verdicts; the held-out fifth exercises admitted)
     "d17_embed_ingest_admit" -> ((s, d, p) => {
       val e = Tables.embeddings(s, d)
-      Dedup.embedIngestAdmit(e.filter(e("vec_id") % 5 =!= 0),
-        e.filter(e("vec_id") % 5 === 0), dbl(p, "threshold", 0.9),
+      val corpus = e.filter(e("vec_id") % 5 =!= 0)
+      val batch = e.filter(e("vec_id") % 5 === 0)
+        .select(col("vec_id"), col("embedding"))
+        .unionByName(corpus.filter(e("vec_id") % 25 === 1)
+          .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")))
+      Dedup.embedIngestAdmit(corpus, batch, dbl(p, "threshold", 0.95),
         i(p, "cells", -1), i(p, "nprobe", 2))
     }),
     "q51_bloom_semi_join" -> ((s, d, p) => RelationalOps.bloomSemiJoin(
@@ -157,15 +188,36 @@ object TaskRunner {
       Tables.documents(s, d), dbl(p, "threshold", 0.8),
       i(p, "numHashes", 64), i(p, "bands", 16),
       capL(p, "dfCap", 1000L))),
-    "d24_dedup_sweep" -> ((s, d, p) => Dedup.dedupSweep(
-      Tables.documents(s, d), Tables.embeddings(s, d),
-      dbl(p, "jaccardThreshold", 0.8), dbl(p, "containThreshold", 0.8),
-      dbl(p, "semanticThreshold", 0.95))),
+    // the provenance matrix: plant one positive per regime that the
+    // natural word-salad data lacks (exact copies + prefix-subset docs;
+    // Jaccard and semantic positives occur naturally at these thresholds)
+    "d24_dedup_sweep" -> ((s, d, p) => {
+      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+      val planted = docs
+        .unionByName(docs.filter(col("doc_id") % 50 === 0)
+          .select((col("doc_id") + 4000000L).as("doc_id"), col("text")))
+        .unionByName(docs.filter(col("doc_id") % 25 === 0)
+          .select((col("doc_id") + 5000000L).as("doc_id"),
+            expr("array_join(slice(split(text, ' '), 1, " +
+              "CAST(size(split(text, ' ')) * 9 div 10 AS INT)), ' ')").as("text")))
+      Dedup.dedupSweep(planted, Tables.embeddings(s, d),
+        dbl(p, "jaccardThreshold", 0.8), dbl(p, "containThreshold", 0.8),
+        dbl(p, "semanticThreshold", 0.5), Some(1000L))
+    }),
     "d05_embed_dedup" -> ((s, d, p) => Dedup.embedDedup(
       Tables.embeddings(s, d), dbl(p, "threshold", 0.5))),
-    "d06_embed_dedup_lsh" -> ((s, d, p) => Dedup.embedDedupLsh(
-      Tables.embeddings(s, d), dbl(p, "threshold", 0.5),
-      i(p, "tables", -1), i(p, "bits", -1), i(p, "dim", 64))),
+    // d06 runs IN ITS LSH REGIME (threshold 0.75; < 0.7 delegates to
+    // the exact join and is spec-pinned byte-identical). The testdata
+    // has no natural pairs above cos 0.7, so the input unions an
+    // id-offset copy of the table: n planted cos=1.0 pairs the banded
+    // LSH must recall — the oracle applies the same construction.
+    "d06_embed_dedup_lsh" -> ((s, d, p) => {
+      val e = Tables.embeddings(s, d)
+      val planted = e.select(col("vec_id"), col("embedding")).unionByName(
+        e.select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")))
+      Dedup.embedDedupLsh(planted, dbl(p, "threshold", 0.75),
+        i(p, "tables", -1), i(p, "bits", -1), i(p, "dim", 64))
+    }),
     "a01_knn_brute" -> ((s, d, p) => Ann.knnBrute(
       Tables.embeddings(s, d), i(p, "nQueries", 10), i(p, "k", 3))),
     "a22_pca_reduce" -> ((s, d, p) => Ann.pcaReduce(
@@ -203,14 +255,15 @@ object TaskRunner {
     "a02_knn_lsh" -> ((s, d, p) => Ann.knnLsh(
       Tables.embeddings(s, d), i(p, "nQueries", 10), i(p, "k", 3),
       i(p, "tables", 4), i(p, "planesPerTable", 6), i(p, "dim", 64))),
-    // IVF cell source: labelCells=true pins the supervised (oracle
-    // twin) build; otherwise cells (0 = auto ~sqrt(n)) sizes the
-    // sample-trained k-means quantizer — the binding that scales cell
-    // count with the corpus
+    // IVF cell source: labelCells (default true) pins the supervised
+    // label-centroid build, the SQL-expressible oracle twin;
+    // labelCells=false switches to the sample-trained k-means quantizer
+    // sized by cells (0 = auto ~sqrt(n)) — the binding that scales cell
+    // count with the corpus (the 100 TB path, spec-covered in AnnSpec)
     "a04_ivf_knn" -> ((s, d, p) => {
       val e = Tables.embeddings(s, d)
       Ann.ivfKnn(e, i(p, "nQueries", 10), i(p, "k", 3), i(p, "nprobe", 2),
-        centroids = if (p.get("labelCells").exists(_.trim.toBoolean))
+        centroids = if (p.get("labelCells").forall(_.trim.toBoolean))
           Some(Ann.labelCentroids(e)) else None,
         cells = i(p, "cells", 0))
     }),
@@ -220,7 +273,7 @@ object TaskRunner {
     "a07_knn_join" -> ((s, d, p) => {
       val e = Tables.embeddings(s, d)
       Ann.knnJoin(e, i(p, "k", 3), i(p, "nprobe", 2),
-        centroids = if (p.get("labelCells").exists(_.trim.toBoolean))
+        centroids = if (p.get("labelCells").forall(_.trim.toBoolean))
           Some(Ann.labelCentroids(e)) else None,
         cells = i(p, "cells", 0))
     }),
@@ -253,9 +306,16 @@ object TaskRunner {
       Ann.ivfAppend(e.filter(e("vec_id") % m =!= 0), e.filter(e("vec_id") % m === 0),
         cells = i(p, "cells", 0), balanceFactor = dbl(p, "balanceFactor", 2.0))
     }),
+    // balanceFactor 1.2 so the natural occupancy skew of the sqrt(n)
+    // k-means build exercises the split path at test SFs (2.0 is the
+    // production default, matching a12's). The binding serializes the
+    // vector column: the pandas result comparator cannot sort ndarray
+    // cells, so the inventory output carries json text while the typed
+    // Ann.cellSplit keeps array<float> for a04/a07 composition
     "a14_cell_split" -> ((s, d, p) => Ann.cellSplit(
       Tables.embeddings(s, d), cells = i(p, "cells", 0),
-      balanceFactor = dbl(p, "balanceFactor", 1.2), iters = i(p, "iters", 3))),
+      balanceFactor = dbl(p, "balanceFactor", 1.2), iters = i(p, "iters", 3))
+      .withColumn("centroid", to_json(col("centroid")))),
     "d08_dedup_apply" -> ((s, d, p) => Dedup.dedupApply(
       Tables.documents(s, d), dbl(p, "threshold", 0.8),
       capL(p, "dfCap", 1000L))),
@@ -306,8 +366,11 @@ object TaskRunner {
       Tables.documents(s, d), i(p, "spanTokens", 10))),
     "t21_source_drift" -> ((s, d, p) => TextStats.sourceDrift(
       Tables.documents(s, d), i(p, "topK", 50))),
+    // same vector-serialization contract as a14: the typed API keeps the
+    // embeddings-table shape, the inventory output is comparator-sortable
     "t22_hash_embed" -> ((s, d, p) => TextStats.hashEmbed(
-      Tables.documents(s, d), i(p, "dim", 64), l(p, "seed", 42L))),
+      Tables.documents(s, d), i(p, "dim", 64), l(p, "seed", 42L))
+      .withColumn("embedding", to_json(col("embedding")))),
     "t23_source_upsample" -> ((s, d, p) => TextStats.sourceUpsample(
       Tables.documents(s, d), dbl(p, "maxEpochs", 3.0))),
     "t19_cooccurrence" -> ((s, d, p) => TextStats.cooccurrence(
@@ -315,6 +378,9 @@ object TaskRunner {
     "t18_quality_filter" -> ((s, d, p) => TextStats.qualityFilter(
       Tables.documents(s, d), i(p, "minTokens", 20), i(p, "maxTokens", 2048),
       dbl(p, "minQuality", 0.6), dbl(p, "maxRepetition", 0.1))),
+    // BM25 keyword retrieval (rows-only: ln is transcendental); the
+    // query set derives from the corpus deterministically, and t29
+    // probes the SAVED inverted index, spec-pinned result-identical
     "t28_bm25_search" -> ((s, d, p) => {
       val docs = Tables.documents(s, d)
       TextStats.bm25Search(docs,
@@ -327,10 +393,25 @@ object TaskRunner {
     "t33_textrank" -> ((s, d, p) => TextStats.textrankKeywords(
       Tables.documents(s, d), topK = i(p, "topK", 5),
       iterations = i(p, "iterations", 10), damping = dbl(p, "damping", 0.85))),
-    "t36_boilerplate_scrub" -> ((s, d, p) => TextStats.boilerplateScrub(
-      Tables.documents(s, d), i(p, "minDocs", 3).toLong, i(p, "minChars", 5))),
-    "t35_code_detect" -> ((s, d, p) => TextStats.codeDetect(
-      Tables.documents(s, d), dbl(p, "symPerKchar", 30.0), i(p, "minKeywords", 2))),
+    // single-line word-salad docs carry no natural boilerplate: wrap
+    // every doc in a shared header/footer (the oracle wraps identically)
+    "t36_boilerplate_scrub" -> ((s, d, p) => {
+      val docs = Tables.documents(s, d)
+      TextStats.boilerplateScrub(docs.select(col("doc_id"), col("source"),
+        concat(lit("HEADER: ACME CRAWL\n"), col("text"),
+          lit("\nfooter terms apply")).as("text")),
+        i(p, "minDocs", 3).toLong, i(p, "minChars", 5))
+    }),
+    // word-salad testdata has no natural code: plant snippet docs at
+    // offset ids (the d06 convention; the oracle unions identically)
+    "t35_code_detect" -> ((s, d, p) => {
+      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+      TextStats.codeDetect(docs.unionByName(docs.filter(col("doc_id") % 40 === 0)
+        .select((col("doc_id") + 3000000L).as("doc_id"),
+          lit("def main(args): { return os.path.join(a, b); } // x => y && z")
+            .as("text"))),
+        dbl(p, "symPerKchar", 30.0), i(p, "minKeywords", 2))
+    }),
     "t34_kwic" -> ((s, d, p) => TextStats.kwic(
       Tables.documents(s, d),
       terms = p.get("terms").map(_.split(",").map(_.trim).toSeq),
@@ -378,11 +459,9 @@ object TaskRunner {
       str(p, "steps", "view,click,signup,purchase").split(",").map(_.trim).toSeq,
       l(p, "windowMicros", 43200000000L))),
     "q43_period_delta" -> ((s, d, p) => TrackAnalytics.periodDelta(eventsIn(s, d, p))),
-    // ----- full-inventory binding (the remaining ids; every
-    // SparkEntry.queries key resolves to a param runner — the
-    // TaskRunnerSpec sync guard pins 100% coverage). Events-driven
-    // analyses honor the task date range via eventsIn; fixed-shape
-    // reports bind their default tables.
+    // ----- the remaining ids. Events-driven analyses honor the task
+    // date range via eventsIn; fixed-shape reports bind their default
+    // tables.
     "q01_flow_agg" -> ((s, d, _) => FlowAnalytics.flowAgg(Tables.lineitem(s, d))),
     "q03_speed_buckets" -> ((s, d, _) => FlowAnalytics.speedBuckets(Tables.lineitem(s, d))),
     "q05_star_join_flow" -> ((s, d, _) => FlowAnalytics.starJoinFlow(
@@ -481,6 +560,10 @@ object TaskRunner {
     "d01_exact_dedup" -> ((s, d, _) => Dedup.exactDedup(Tables.documents(s, d))),
     "d04_simhash" -> ((s, d, p) => Dedup.simHash(
       Tables.documents(s, d), i(p, "maxHamming", 3))),
+    // the AT-REST index probes (build once, probe per batch): each run
+    // builds the index in a fresh temp dir, then probes it —
+    // result-identical to its live twin (d11/d12/d20), whose oracle
+    // it shares
     "d14_dedup_probe_indexed" -> ((s, d, p) => {
       val docs = Tables.documents(s, d)
       val src = str(p, "batchSource", "src0")
@@ -566,19 +649,37 @@ object TaskRunner {
     "m10_chunk_containment" -> ((s, d, p) => graft.multimodal.BinaryPipeline.chunkContainment(
       Tables.documents(s, d), dbl(p, "threshold", 0.8), i(p, "minChunks", 4),
       i(p, "minLen", 16), i(p, "maskBits", 5), l(p, "dfCap", 1000L))),
+    // rows-only: the block-mean hash is a compiled native fn (spec
+    // pins planted near-dup recall + integer-exact hash laws); the
+    // planted copies guarantee output-visible pairs
     "m12_payload_blockhash" -> ((s, d, p) => graft.multimodal.BinaryPipeline.payloadBlockhash(
-      Tables.documents(s, d), i(p, "maxHamming", 3))),
+      plantedBytePayloads(s, d), i(p, "maxHamming", 3))),
+    // m12's pairs resolved to keep/drop verdicts — same planted docs,
+    // so the planted edit/copy chains must collapse to their originals
     "m13_blockhash_clusters" -> ((s, d, p) => graft.multimodal.BinaryPipeline.blockhashClusters(
-      Tables.documents(s, d), i(p, "maxHamming", 3))),
+      plantedBytePayloads(s, d), i(p, "maxHamming", 3))),
+    // the store roundtrips the same planted versions m12 pairs — the
+    // exact-copy plants share every chunk, the edited ones most
     "m14_chunk_store" -> ((s, d, p) => graft.multimodal.BinaryPipeline.chunkStoreRoundtrip(
-      Tables.documents(s, d), SparkEntry.scratchDir("graft_m14p_"),
+      plantedBytePayloads(s, d), SparkEntry.scratchDir("graft_m14p_"),
       i(p, "minLen", 32), i(p, "maskBits", 6))),
     "m11_payload_entropy" -> ((s, d, _) => graft.multimodal.BinaryPipeline.payloadEntropy(
       Tables.documents(s, d))),
-    "m16_payload_sweep" -> ((s, d, p) => graft.multimodal.BinaryPipeline.payloadSweep(
-      Tables.documents(s, d), dbl(p, "containThreshold", 0.8),
-      i(p, "maxHamming", 3), i(p, "minShared", 2), i(p, "minChunks", 4),
-      i(p, "minLen", 16), i(p, "maskBits", 5), l(p, "dfCap", 1000L))),
+    // the payload provenance matrix (d24's shape for bytes): the m12
+    // plants cover the exact + perceptual/near regimes; a truncated
+    // 70%-prefix slice of every 40th doc plants the lineage regime
+    "m16_payload_sweep" -> ((s, d, p) => {
+      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+      val planted = plantedBytePayloads(s, d)
+        .unionByName(docs.filter(col("doc_id") % 40 === 0)
+          .select((col("doc_id") + 3000000L).as("doc_id"),
+            expr("substring(text, 1, CAST(octet_length(text) * 7 div 10 AS INT))")
+              .as("text")))
+      graft.multimodal.BinaryPipeline.payloadSweep(planted,
+        dbl(p, "containThreshold", 0.8),
+        i(p, "maxHamming", 3), i(p, "minShared", 2), i(p, "minChunks", 4),
+        i(p, "minLen", 16), i(p, "maskBits", 5), l(p, "dfCap", 1000L))
+    }),
     "m15_chunk_vacuum" -> ((s, d, p) => {
       import graft.multimodal.BinaryPipeline
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
@@ -593,6 +694,9 @@ object TaskRunner {
       BinaryPipeline.vacuumChunkStore(s, tmp)
     }),
     "a03_centroid_assign" -> ((s, d, _) => Ann.centroidAssign(Tables.embeddings(s, d))),
+    // a04's at-rest twin: sink_ann_index persists the corpus cells and
+    // ivfKnnIndexed probes only the queried cells' directories —
+    // result-identical to the live search under the same centroids
     "a15_ivf_probe_indexed" -> ((s, d, p) => {
       val e = Tables.embeddings(s, d)
       val nQ = i(p, "nQueries", 10)
@@ -650,6 +754,9 @@ object TaskRunner {
       Ann.ivfBqKnnIndexed(e.filter(e("vec_id") < nQ), tmp, e,
         k, i(p, "nprobe", 2), rr)
     }),
+    // hybrid retrieval: BM25 lexical run fused with a semantic run over
+    // the model-free hash embeddings (t22), rank-space RRF — rows-only
+    // (both legs are float-scored); a21 is its at-rest twin
     "a20_rrf_fusion" -> ((s, d, p) => {
       val docs = Tables.documents(s, d)
       val kRun = i(p, "kRun", 10)
@@ -690,11 +797,10 @@ object TaskRunner {
   )
 
   /** Run any inventory query under a param set; unknown params are
-    * ignored, unlisted queries run with their defaults. */
+    * ignored, absent ones take the inventory defaults. */
   def run(spark: SparkSession, dir: String, query: String,
           params: Map[String, String] = Map.empty): DataFrame =
     runners.get(query).map(_(spark, dir, params))
-      .orElse(SparkEntry.queries.get(query).map(_(spark, dir)))
       .getOrElse(throw new IllegalArgumentException(s"unknown query: $query"))
 
   /** Parse the reference's JSON task_parm shape into a flat param map

